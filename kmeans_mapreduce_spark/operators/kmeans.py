@@ -17,6 +17,12 @@ of the same aggregation: zero extra scans. Centroids live on the driver
 between iterations (K rows), exactly like MLlib's own KMeans; plans are
 rebuilt from literals each iteration so lineage stays O(1).
 
+Every plan over driver-held centres — assignment, the Lloyd step and
+k-means|| scoring and weighting — takes its arg-min from
+``functions.distance``, which renders it as one SQL text expression
+with exact double literals; nothing here builds a ``Column`` tree of
+centre literals.
+
 Semantics are textbook Lloyd's, fixing the reference's accidents
 (SURVEY §2.3): cluster identity survives aggregation (cid, not
 partition index), init/repair sample uniformly within the true bounding
@@ -38,14 +44,18 @@ is worth revisiting for many-iteration fits.
 
 from __future__ import annotations
 
-import math
 import random
 from dataclasses import dataclass, field
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kmeans_mapreduce_spark.functions.distance import nearest_centroid_2d, sq_dist_2d
+from kmeans_mapreduce_spark.functions.distance import (
+    nearest_centroid_2d,
+    nearest_centroid_2d_sql,
+    sq_dist_2d,
+)
 
 Center = tuple[int, float, float]  # (cid, cx, cy)
 
@@ -68,16 +78,21 @@ def round_half_up(x: float, digits: int) -> float:
 
 
 def normalize_partitions(df: DataFrame) -> DataFrame:
-    """Bound the per-iteration fixed cost of an Arrow loop input: cap
-    over-partitioned inputs at 2× parallelism (many small files multiply
-    the per-task launch + Arrow round-trip by every iteration; measured
-    1.5× above linear at 304 partitions) and raise under-partitioned
-    ones to parallelism/4 (a 3-row-group parquet caches as 3 partitions
-    and caps the loop at 3-way compute — but full-width fan-out of a
-    K-row partial agg loses to per-task Python/Arrow overhead: 64-way
-    measured 2.4× slower than 8-way; a quarter of the cores is the
-    measured sweet spot). ONE shuffle, amortized over all iterations.
-    Shared by the 2-D and n-D fits — retune here, not per-copy."""
+    """Bound the per-iteration fixed cost of a loop input by its
+    PARTITION count: cap over-partitioned inputs at 2× parallelism (many
+    small files multiply the per-task launch + Arrow round-trip by every
+    iteration; measured 1.5× above linear at 304 partitions) and raise
+    under-partitioned ones to max(2, parallelism/4) (full-width fan-out
+    of a K-row partial agg loses to per-task Python/Arrow overhead:
+    64-way measured 2.4× slower than 8-way). ONE shuffle, amortized over
+    all iterations. Shared by the 2-D and n-D fits — retune here, not
+    per-copy.
+
+    It counts partitions, not rows per partition. A parquet file with
+    one row group scans as several splits with every row in one: 600k
+    lineitem points scan as 3 splits, 100k×64 vectors as 4, both at or
+    above the floor on 4 cores, so those fits run every step on one
+    partition (one core)."""
     spark_ctx = df.sparkSession.sparkContext
     target = spark_ctx.defaultParallelism * 2
     floor = max(2, spark_ctx.defaultParallelism // 4)
@@ -138,42 +153,6 @@ def assign_df(points: DataFrame, centroids: DataFrame) -> DataFrame:
         )
     )
     return best
-
-
-def assign_broadcast(points: DataFrame, centers: list[Center]) -> DataFrame:
-    """Same semantics as :func:`assign`, but centers travel as a
-    broadcast ONE-ROW table (cx0,cy0,…) instead of plan literals.
-
-    Inside the Lloyd loop the literal form generates *different* code
-    every iteration (new constants → Janino recompiles, ~0.3 s/iter —
-    half the per-iteration wall at sf0.1). Here the generated code is
-    identical across iterations — centroid values arrive as runtime
-    join data via a 1-row BroadcastNestedLoopJoin — so codegen compiles
-    once and every later iteration is pure execution. Still narrow: no
-    shuffle, K×4 flops/row in whole-stage codegen.
-    """
-    spark = points.sparkSession
-    ordered = sorted((int(c), float(x), float(y)) for c, x, y in centers)
-    row = tuple(v for _, x, y in ordered for v in (x, y))
-    schema = ", ".join(f"cx{i} DOUBLE, cy{i} DOUBLE" for i in range(len(ordered)))
-    cdf = spark.createDataFrame([row], schema)
-    cands = [
-        F.struct(
-            sq_dist_2d(
-                F.col("x"), F.col("y"), F.col(f"cx{i}"), F.col(f"cy{i}")
-            ).alias("d2"),
-            F.lit(cid).cast("int").alias("cid"),
-        )
-        for i, (cid, _, _) in enumerate(ordered)
-    ]
-    best = F.array_min(F.array(*cands))
-    return points.crossJoin(F.broadcast(cdf)).select(
-        "point_id",
-        "x",
-        "y",
-        best["cid"].alias("cid"),
-        best["d2"].alias("min_d2"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -287,32 +266,35 @@ def kmpp_round_probs(
     )
 
 
-def init_kmeans_parallel(
+def kmpp_candidates(
     points: DataFrame,
     k: int,
     seed: int = 42,
     rounds: int = 5,
     oversample: int | None = None,
-) -> list[Center]:
-    """k-means|| init (Bahmani et al., VLDB 2012) — the scale-correct
-    seeding the reference lacks (its uniform-box init needs many Lloyd
-    iterations to recover from bad seeds; D²-sampling starts near the
-    final solution).
+    n_rows: int | None = None,
+) -> tuple[list[tuple[float, float]], np.ndarray]:
+    """The distributed half of :func:`init_kmeans_parallel`: draw the
+    k-means|| candidates and weight each by the points nearest to it.
 
     Each round: score every point against the current candidate set
-    (narrow literal-argmin map — no shuffle), Σd² via one aggregate,
-    then sample points with probability min(1, l·d²/φ) using a seeded
-    per-round ``rand``. Candidates (≈ rounds·l total, driver-tiny) are
-    weighted by their nearest-point counts and reduced to k with a
-    deterministic weighted Lloyd on the driver. O(rounds) passes over
-    the data, exactly like MLlib's implementation of the same paper.
-    """
-    import numpy as np
+    (:func:`kmpp_scores`: the narrow literal arg-min of
+    ``nearest_centroid_2d``, one SQL text expression — no shuffle, no
+    per-literal Py4J calls), Σd² via one aggregate, then sample points
+    with probability min(1, l·d²/φ) using a seeded per-round ``rand``.
+    The weights are the candidates' nearest-point counts, from one more
+    ``nearest_centroid_2d`` job. O(rounds) passes over the data, exactly
+    like MLlib's implementation of the same paper.
 
+    ``n_rows`` is the row count of ``points`` when the caller already
+    has it (``fit`` counts in its bounding-box job); without it the
+    first draw's sampling fraction costs one ``count()`` job.
+    """
     l = oversample or 2 * k
     pts = points.select("x", "y")
-    rng = random.Random(seed)
-    frac = min(1.0, 100.0 / max(pts.count(), 1))
+    if n_rows is None:
+        n_rows = pts.count()
+    frac = min(1.0, 100.0 / max(n_rows, 1))
     first = pts.sample(False, frac, seed).limit(1).collect()
     if not first:
         first = pts.limit(1).collect()
@@ -332,13 +314,35 @@ def init_kmeans_parallel(
         )
         cands.extend((row["x"], row["y"]) for row in new)
 
-    # weights: how many points each candidate wins
     lit_centers = [(i, cx, cy) for i, (cx, cy) in enumerate(cands)]
     best = nearest_centroid_2d(F.col("x"), F.col("y"), lit_centers)
     wrows = pts.select(best["cid"].alias("cid")).groupBy("cid").count().collect()
     weights = np.zeros(len(cands))
     for row in wrows:
         weights[row["cid"]] = row["count"]
+    return cands, weights
+
+
+def init_kmeans_parallel(
+    points: DataFrame,
+    k: int,
+    seed: int = 42,
+    rounds: int = 5,
+    oversample: int | None = None,
+    n_rows: int | None = None,
+) -> list[Center]:
+    """k-means|| init (Bahmani et al., VLDB 2012) — the scale-correct
+    seeding the reference lacks (its uniform-box init needs many Lloyd
+    iterations to recover from bad seeds; D²-sampling starts near the
+    final solution).
+
+    :func:`kmpp_candidates` draws ≈ rounds·l weighted candidates
+    (driver-tiny); a deterministic weighted Lloyd on the driver reduces
+    them to k. ``n_rows`` is passed through: give it when the row count
+    is already known, to save a ``count()`` job.
+    """
+    cands, weights = kmpp_candidates(points, k, seed, rounds, oversample, n_rows)
+    rng = random.Random(seed)
 
     # driver-side weighted Lloyd to reduce candidates → k (deterministic)
     arr = np.array(cands)
@@ -476,8 +480,8 @@ def lloyd_step_arrow(
     cx = np.array([x for _, x, _ in ordered])
     cy = np.array([y for _, _, y in ordered])
     k = len(ordered)
-    # nan-guard is only needed when a center is non-finite (the
-    # lloyd_step_sql fallback path); keep the hot loop one pass
+    # nan-guard is only needed when a center is non-finite; keep the
+    # hot loop one pass
     guard_nan = not (np.isfinite(cx).all() and np.isfinite(cy).all())
 
     def partials(batches):
@@ -572,16 +576,16 @@ CODEGEN_MIN_ROWS = 5_000_000
 def lloyd_step_sql(
     points_xy: DataFrame, centers: list[Center]
 ) -> tuple[dict[int, tuple[float, float]], dict[int, int], float]:
-    """One Lloyd iteration as a single string-built Catalyst plan.
+    """One Lloyd iteration as a single text-built Catalyst plan.
 
-    Same contract and semantics as :func:`lloyd_step` — squared
-    Euclidean ``(x−cx)²+(y−cy)²`` in the identical IEEE op order, ties
-    break first-wins to the lowest cid (reference ``mapper.py:43``) —
-    but the expression tree arrives as ONE ``selectExpr`` string batch
-    instead of thousands of Py4J ``Column`` calls. Why: profiling the
-    sf0.1 loop showed ~0.3 s/iteration spent *driver-side in Python*
-    building ``struct``/``array_min`` trees one Py4J round-trip at a
-    time; the JVM parses the same expressions from text in ~5 ms.
+    Same contract and semantics as :func:`lloyd_step`, because both
+    take their arg-min from ``functions.distance``: squared Euclidean
+    ``(x−cx)²+(y−cy)²`` in the identical IEEE op order, ties break
+    first-wins to the lowest cid (reference ``mapper.py:43``), and a
+    non-finite centre never beats a finite one. Here the arg-min is the
+    ``nearest_centroid_2d_sql`` text itself, parsed by the JVM in one
+    call (~5 ms) rather than built from one Py4J ``Column`` call per
+    literal (profiled at ~0.3 s an iteration at sf0.1).
 
     The plan itself is the right one at every scale: a narrow literal
     arg-min map (no join, no shuffle of points) into a partial+final
@@ -590,35 +594,9 @@ def lloyd_step_sql(
     ``CODEGEN_MIN_ROWS`` — fresh literals mean a fresh compile every
     iteration, which dominates at bench scale and vanishes at 100 TB).
     """
-    ordered = sorted((int(c), float(x), float(y)) for c, x, y in centers)
-    # repr() of a finite double round-trips exactly through the SQL
-    # parser (shortest-repr → decimal literal → double); nan/inf would
-    # produce unparseable or always-false SQL text, so route those
-    # centers through the numerically-safe Arrow step instead (same
-    # contract, centers ride in the closure, not in SQL text).
-    if not all(
-        math.isfinite(x) and math.isfinite(y) for _, x, y in ordered
-    ):
-        return lloyd_step_arrow(points_xy, centers)
-    k = len(ordered)
-    d_exprs = [
-        f"((x - ({x!r}))*(x - ({x!r})) + (y - ({y!r}))*(y - ({y!r}))) AS d{i}"
-        for i, (_, x, y) in enumerate(ordered)
-    ]
-    min_expr = (
-        "least(" + ",".join(f"d{i}" for i in range(k)) + ")" if k > 1 else "d0"
-    )
-    case_expr = (
-        "CASE "
-        + " ".join(
-            f"WHEN d{i} = min_d2 THEN {int(cid)}" for i, (cid, _, _) in enumerate(ordered)
-        )
-        + " END AS cid"
-    )
     rows = (
-        points_xy.selectExpr("x", "y", *d_exprs)
-        .selectExpr("x", "y", f"{min_expr} AS min_d2", *[f"d{i}" for i in range(k)])
-        .selectExpr("x", "y", "min_d2", case_expr)
+        points_xy.selectExpr("x", "y", f"{nearest_centroid_2d_sql(centers)} AS best")
+        .selectExpr("x", "y", "best.d2 AS min_d2", "best.cid AS cid")
         .groupBy("cid")
         .agg(
             F.avg("x").alias("cx"),
@@ -661,8 +639,8 @@ def fit(
     interpreted eval below ``CODEGEN_MIN_ROWS``; above it codegen stays
     on and amortizes). ``"arrow"`` iterates with
     :func:`lloyd_step_arrow` (constant plan, Arrow partial agg);
-    ``"expr"`` uses the Py4J-built :func:`lloyd_step`. Same textbook
-    semantics in every mode.
+    ``"expr"`` uses :func:`lloyd_step` (the ``assign`` DataFrame, which
+    keeps ``point_id``). Same textbook semantics in every mode.
 
     ``round_digits``: round each iteration's means to this many decimals
     before they become the next generation's centers. With a fixed init
@@ -723,7 +701,7 @@ def fit(
             spark.conf.set("spark.sql.codegen.wholeStage", "false")
         if init_centers is None:
             if init == "k-means||":
-                centers = init_kmeans_parallel(points, k, seed)
+                centers = init_kmeans_parallel(points, k, seed, n_rows=b["n_rows"])
             else:
                 centers = init_random(k, bounds, seed)
         else:

@@ -114,9 +114,10 @@ def _argmin_select_sql(center_sqls: list[tuple[str, str, str]]) -> tuple[str, st
 def _assign_sql(centers: list[tuple[int, float, float]]) -> str:
     """Shared CTE prefix: pts → per-row distances → CASE arg-min.
 
-    The oracle uses scalar CASE/LEAST; the engine uses a narrow
-    array_min expression — same semantics, independently derived plans
-    (that asymmetry is the point of an oracle).
+    The oracle uses scalar CASE/LEAST; the engine uses the LEAST +
+    array_position text of ``functions.distance`` — same semantics,
+    independently derived plans (that asymmetry is the point of an
+    oracle).
     """
     center_sqls = [
         (str(cid), f"CAST({cx!r} AS DOUBLE)", f"CAST({cy!r} AS DOUBLE)")

@@ -6,6 +6,9 @@ point, so comparisons are exact (no tolerance needed).
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
 import pytest
 
 from kmeans_mapreduce_spark.operators import kmeans as km
@@ -203,9 +206,9 @@ def test_elbow_sweep_wssse_monotone_in_k(spark):
 
 def test_lloyd_step_sql_nonfinite_center_falls_back(spark):
     """ADVICE r8: repr() of nan/inf makes unparseable/always-false SQL
-    text, so lloyd_step_sql must route non-finite centers through the
-    Arrow step instead of crashing — and still produce the numeric
-    answer for the finite centers."""
+    text, so lloyd_step_sql must render non-finite centers its own way
+    instead of crashing — and still produce the numeric answer for the
+    finite centers."""
     from kmeans_mapreduce_spark.operators import kmeans as km
 
     pts = spark.createDataFrame(
@@ -214,7 +217,7 @@ def test_lloyd_step_sql_nonfinite_center_falls_back(spark):
     bad = [(0, float("nan"), 0.0), (1, 10.0, 10.0)]
     means, sizes, sse = km.lloyd_step_sql(pts, bad)
     # every point lands on the one finite center (nan distances never
-    # win an argmin against a finite one in the Arrow step)
+    # win an argmin against a finite one)
     assert sizes == {1: 3}
     inf_c = [(0, float("inf"), 0.0), (1, 0.0, 0.0)]
     means2, sizes2, _ = km.lloyd_step_sql(pts, inf_c)
@@ -257,3 +260,146 @@ def test_assign_nd_arrow_matches_expr_bitwise(spark):
     for impl in ("expr", "arrow"):
         got = dict(knd.assign_nd(pts_int, centers, impl=impl).dtypes)
         assert got["point_id"] == "int", (impl, got)
+
+
+# ---------------------------------------------------------------------------
+# the shared SQL-text arg-min (functions.distance) against numpy
+# ---------------------------------------------------------------------------
+
+NAN, INF = float("nan"), float("inf")
+EXACT_LITERALS = [5e-324, 1.7976931348623157e308, 1e-07, 0.30000000000000004]
+
+
+def _np_nearest(xy, centers):
+    """numpy twin of the rendered arg-min: per centre
+    ((x - cx)*(x - cx)) + ((y - cy)*(y - cy)), then the first centre in
+    cid order under Spark's double ordering (NaN above every value)."""
+    ordered = sorted(centers)
+    cx = np.array([c[1] for c in ordered])
+    cy = np.array([c[2] for c in ordered])
+    x, y = xy[:, :1], xy[:, 1:]
+    with np.errstate(invalid="ignore", over="ignore"):
+        d = (x - cx) * (x - cx) + (y - cy) * (y - cy)
+    out = []
+    for row in d:
+        j = min(
+            range(len(ordered)),
+            key=lambda j: (math.isnan(row[j]), 0.0 if math.isnan(row[j]) else row[j], j),
+        )
+        out.append((ordered[j][0], float(row[j])))
+    return out
+
+
+def _same(a, b):
+    return a == b or (math.isnan(a) and math.isnan(b))
+
+
+def _renderer_cases():
+    rng = np.random.default_rng(11)
+    finite = [(cid, *map(float, rng.uniform(-40, 40, 2))) for cid in (7, 2, 11, 0, 5)]
+    dup = [(4, 1.5, -2.0), (1, 1.5, -2.0), (3, 10.0, 10.0), (2, 10.0, 10.0)]
+    nonfinite = [(0, NAN, 0.0), (1, INF, 1.0), (2, 3.0, -INF), (3, 4.0, 4.0)]
+    a, b, c, d = EXACT_LITERALS
+    literals = [(0, a, c), (1, d, b), (2, c, d), (3, -b, a)]
+    return {
+        "finite": finite,
+        "duplicates": dup,
+        "nonfinite": nonfinite,
+        "all_nan": [(0, NAN, 1.0), (1, NAN, NAN)],
+        "nan_and_inf": [(5, NAN, 0.0), (6, -INF, 0.0)],
+        "literals": literals,
+        "one_centre": [(9, c, d)],
+    }
+
+
+@pytest.fixture(scope="module")
+def renderer_points():
+    rng = np.random.default_rng(5)
+    a, b, c, d = EXACT_LITERALS
+    special = [
+        (5.75, 4.0),  # equidistant from both duplicate pairs
+        (1.5, -2.0),
+        (d, c),
+        (a, 0.0),
+        (c, d),
+        (1e308, -1e308),
+        (0.0, 0.0),
+    ]
+    xy = np.vstack([rng.uniform(-60, 60, size=(200, 2)), np.array(special)])
+    return xy
+
+
+@pytest.mark.parametrize("case", list(_renderer_cases()))
+def test_nearest_centroid_text_is_exact_through_every_caller(spark, renderer_points, case):
+    """assign, kmpp_scores and lloyd_step_sql all take their arg-min from
+    the shared SQL-text renderer: cid and d2 must equal numpy's in the
+    program's op order, bit for bit — random, duplicate (ties to the
+    lowest cid), NaN/±inf (never win; all-NaN gives the lowest cid with
+    d2 NaN) and extreme-literal centres alike."""
+    centers = _renderer_cases()[case]
+    xy = renderer_points
+    want = _np_nearest(xy, centers)
+    rows = [(i, float(x), float(y)) for i, (x, y) in enumerate(xy)]
+    df = spark.createDataFrame(rows, POINTS_2D)
+
+    got = {r["point_id"]: (r["cid"], r["min_d2"]) for r in km.assign(df, centers).collect()}
+    for i, (cid, d2) in enumerate(want):
+        assert got[i][0] == cid and _same(got[i][1], d2), (case, xy[i], got[i], (cid, d2))
+
+    # kmpp_scores numbers its candidates by position
+    cands = [(cx, cy) for _, cx, cy in sorted(centers)]
+    scored = km.kmpp_scores(df, cands).select("point_id", "d2").collect()
+    for r in scored:
+        assert _same(r["d2"], want[r["point_id"]][1]), (case, r)
+
+    # one partition: Spark's per-cluster sums run in row order, as here
+    means, sizes, sse = km.lloyd_step_sql(df.select("x", "y").coalesce(1), centers)
+    members: dict[int, list[int]] = {}
+    for i, (cid, _) in enumerate(want):
+        members.setdefault(cid, []).append(i)
+    assert sizes == {cid: len(ix) for cid, ix in members.items()}
+    want_sse = 0.0
+    for cid, ix in members.items():
+        sx = sy = s2 = 0.0
+        for i in ix:
+            sx += xy[i, 0]
+            sy += xy[i, 1]
+            s2 += want[i][1]
+        assert _same(means[cid][0], sx / len(ix)) and _same(means[cid][1], sy / len(ix))
+        want_sse += s2
+    assert _same(sse, want_sse) or math.isclose(sse, want_sse, rel_tol=1e-12)
+
+
+def test_sql_double_literals_round_trip(spark):
+    """Double literals are exact: shortest repr plus a D suffix (a bare
+    1.5 would parse as DECIMAL), string casts for NaN and ±inf."""
+    from kmeans_mapreduce_spark.functions.distance import sql_double
+
+    values = EXACT_LITERALS + [-1e-07, -0.0, 123456789.125, NAN, INF, -INF]
+    cols = ", ".join(f"{sql_double(v)} AS v{i}" for i, v in enumerate(values))
+    df = spark.sql(f"SELECT {cols}")
+    assert all(t == "double" for _, t in df.dtypes)
+    row = df.collect()[0]
+    for i, v in enumerate(values):
+        assert _same(row[i], v), (v, row[i])
+        if v == 0.0:
+            assert math.copysign(1.0, row[i]) == math.copysign(1.0, v)
+
+
+def test_kmeans_parallel_init_repeatable_and_weighted(spark):
+    """init_kmeans_parallel draws the same centres for the same seed,
+    with or without the caller's row count, and weights each candidate
+    by exactly the points numpy assigns to it."""
+    rng = np.random.default_rng(3)
+    xy = np.vstack([rng.normal(c, 1.5, size=(300, 2)) for c in [(0, 0), (25, 0), (0, 25)]])
+    df = spark.createDataFrame([(float(x), float(y)) for x, y in xy], "x DOUBLE, y DOUBLE")
+
+    first = km.init_kmeans_parallel(df, 3, seed=5)
+    assert km.init_kmeans_parallel(df, 3, seed=5) == first
+    assert km.init_kmeans_parallel(df, 3, seed=5, n_rows=len(xy)) == first
+
+    cands, weights = km.kmpp_candidates(df, 3, seed=5, n_rows=len(xy))
+    assert len(cands) > 3  # the weighted reduce runs
+    nearest = _np_nearest(xy, [(i, cx, cy) for i, (cx, cy) in enumerate(cands)])
+    counts = np.bincount([cid for cid, _ in nearest], minlength=len(cands))
+    assert weights.tolist() == counts.tolist()
