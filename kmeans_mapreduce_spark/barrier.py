@@ -29,15 +29,22 @@ CHECKPOINT-AT-SCALE POLICY (r15 verdict task 5):
   cluster). Reliable checkpoints survive executor loss at the cost of
   one DFS round-trip per barrier. Results are IDENTICAL either way —
   the barrier only pins where materialization happens, never what is
-  computed — pinned by ``tests/test_plans.py``'s reliable-checkpoint
-  parity test.
-- Lifetime: non-eager checkpoint blocks are freed when the Python
-  DataFrame is GC'd (ContextCleaner); the bench explicitly
-  ``gc.collect()``s between queries so repeated invocations do not
-  accumulate block storage. Long-lived sessions that call a
-  barrier-bearing operator many times inherit the same discipline
-  (ADVICE r15: the single-node assumption is documented here once,
-  not at 40 call sites).
+  computed — pinned by ``tests/test_extensions.py``'s
+  ``test_barrier_paths_survive_reliable_checkpointing``.
+- Lifetime: both kinds are freed by Spark's ContextCleaner once the
+  checkpointed RDD is garbage-collected on the driver (the Python
+  DataFrame and its JVM twin dropped). Local checkpoint blocks are
+  always cleaned; reliable checkpoint FILES only because
+  ``session.get_spark`` sets
+  ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` (Spark's
+  default is false, which leaks one file copy per barrier per query).
+  A session built elsewhere must set it too, or manage the checkpoint
+  dir's lifetime itself. Cleaning waits for a driver GC: the bench
+  explicitly ``gc.collect()``s between queries so repeated
+  invocations do not accumulate storage, and long-lived sessions that
+  call a barrier-bearing operator many times inherit the same
+  discipline (ADVICE r15: the single-node assumption is documented
+  here once, not at 40 call sites).
 
 Usage — chainable, so call sites read like the localCheckpoint they
 replace::

@@ -625,23 +625,6 @@ def _record_replay_progress(name: str, q) -> None:
 REPLAY_SHUFFLE_PARTITIONS = int(
     os.environ.get("SPARK_GRAFT_REPLAY_PARTITIONS", "8")
 )
-REPLAY_KEYED_PARTITIONS = int(
-    os.environ.get(
-        "SPARK_GRAFT_REPLAY_KEYED_PARTITIONS",
-        os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 8),
-    )
-)
-"""Partition count for the replays whose wall is PER-KEY PYTHON work
-(the TTL dedups: one Arrow batch + state protocol round-trips per key
-inside the stateful stage). r13's fixed 8 was sized for store-INIT-
-bound replays (the stream-stream join instantiates several stores per
-partition); for the key-bound replays it left 24 of 32 cores idle —
-measured r16 (tools/replay_partitions_ab.py, two windows): v1 TTL
-7.4→5.4 s and TWS 8.4→6.9 s at 32 partitions vs 8. Scale-adaptively
-sized to the core count (the driver's 8-core scaling run gets 8, same
-as before; a real cluster sizes via the env override) — guide §2.2.
-The drained row-SET is partition-invariant (the gate sorts before
-hashing), re-verified against the oracle at this count."""
 """Shuffle-partition count pinned for the bounded replays (r13 verdict
 task 1). Stateful streaming instantiates one state store PER shuffle
 partition (several per partition for a stream-stream join) and AQE is
@@ -653,6 +636,23 @@ sorts before hashing), so a small fixed count only changes overhead,
 never results. This bounds the gated REPLAY harness, not the
 production operators — a real cluster job sizes shuffle partitions to
 its key cardinality as usual."""
+REPLAY_KEYED_PARTITIONS = int(
+    os.environ.get(
+        "SPARK_GRAFT_REPLAY_KEYED_PARTITIONS",
+        os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 8),
+    )
+)
+"""Partition count for the replays whose wall is PER-KEY PYTHON work
+(the TTL dedups: one Arrow batch + state protocol round-trips per key
+inside the stateful stage). r13's fixed 8 was sized for store-INIT-
+bound replays (the stream-stream join instantiates several stores per
+partition); for the key-bound replays it left 24 of 32 cores idle —
+measured r16 (an in-session A/B, two windows): v1 TTL
+7.4→5.4 s and TWS 8.4→6.9 s at 32 partitions vs 8. Scale-adaptively
+sized to the core count (the driver's 8-core scaling run gets 8, same
+as before; a real cluster sizes via the env override) — guide §2.2.
+The drained row-SET is partition-invariant (the gate sorts before
+hashing), re-verified against the oracle at this count."""
 
 
 def _drain_bounded_replay(

@@ -44,6 +44,7 @@ is worth revisiting for many-iteration fits.
 
 from __future__ import annotations
 
+import math
 import random
 from dataclasses import dataclass, field
 
@@ -77,30 +78,69 @@ def round_half_up(x: float, digits: int) -> float:
     )
 
 
-def normalize_partitions(df: DataFrame) -> DataFrame:
-    """Bound the per-iteration fixed cost of a loop input by its
-    PARTITION count: cap over-partitioned inputs at 2× parallelism (many
-    small files multiply the per-task launch + Arrow round-trip by every
-    iteration; measured 1.5× above linear at 304 partitions) and raise
-    under-partitioned ones to max(2, parallelism/4) (full-width fan-out
-    of a K-row partial agg loses to per-task Python/Arrow overhead:
-    64-way measured 2.4× slower than 8-way). ONE shuffle, amortized over
-    all iterations. Shared by the 2-D and n-D fits — retune here, not
-    per-copy.
+def partition_rows(df: DataFrame) -> list[int]:
+    """Rows in each non-empty partition of ``df``, in no particular
+    order: one job that reads no column of ``df`` (a parquet scan
+    answers it from row-group metadata)."""
+    counts = (
+        df.select(F.spark_partition_id().alias("pid"))
+        .groupBy("pid")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    )
+    return [r["n"] for r in counts]
 
-    It counts partitions, not rows per partition. A parquet file with
-    one row group scans as several splits with every row in one: 600k
-    lineitem points scan as 3 splits, 100k×64 vectors as 4, both at or
-    above the floor on 4 cores, so those fits run every step on one
-    partition (one core)."""
-    spark_ctx = df.sparkSession.sparkContext
-    target = spark_ctx.defaultParallelism * 2
-    floor = max(2, spark_ctx.defaultParallelism // 4)
-    n0 = df.rdd.getNumPartitions()
-    if n0 > 4 * target:
-        return df.repartition(target)
-    if n0 < floor:
-        return df.repartition(floor)
+
+def normalize_partitions(
+    df: DataFrame, part_rows: list[int] | None = None
+) -> DataFrame:
+    """Shape a loop input so every iteration uses every core, at the
+    price of at most ONE shuffle, amortized over all iterations. Shared
+    by ``fit``, ``fit_nd`` and ``similarity.fit_pq_codebooks`` — retune
+    here, not per caller.
+
+    The rule is on ROWS per partition, with P = ``defaultParallelism``:
+
+    - an over-partitioned input (more than 8P partitions) is capped at
+      2P: many small files multiply the per-task launch and Arrow
+      round-trip by every iteration (measured 1.5× above linear at 304
+      partitions);
+    - otherwise, when the largest partition holds more than twice its
+      fair share ceil(N/P), the input is hash-repartitioned to P
+      partitions on ``monotonically_increasing_id()``. A parquet file
+      with one row group scans as several splits with every row in one
+      of them (600k lineitem points as 3 splits, 100k×64 vectors as 4),
+      so without this every Lloyd step ran on one core; a single
+      partition is the most skewed case of the same rule;
+    - anything else is returned as it is, with no exchange added.
+
+    The key is row-unique, never the coordinates: hashing on ``(x, y)``
+    or ``vec`` would send every copy of a duplicated point to one
+    partition. It is also deterministic for a deterministic input order
+    (partition index and position in it), so two fits of one input —
+    and a fit whose upstream tasks are retried — see the same rows in
+    the same order and give bit-identical results. Hash partitioning
+    rather than round-robin skips the local sort round-robin needs for
+    retry safety. Measured with ``kmbench`` on 4 cores, medians of 10
+    alternating runs against the partition-count rule: warm ``fit_nd``
+    on 100k×64, K=256, 3 iterations 3.79 → 2.71 s; warm ``fit`` on 600k
+    lineitem points, K=8, 6 iterations 3.29 → 2.31 s. On 60k points
+    (k-means|| init) warm fits did not move and the first fit in a
+    fresh JVM took 4% longer (6.60 → 6.88 s).
+
+    ``part_rows`` are the rows in each partition of ``df`` when the
+    caller already has them (``fit`` takes them from its bounding-box
+    job); without them the decision costs one :func:`partition_rows`
+    job.
+    """
+    p = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() > 8 * p:
+        return df.repartition(2 * p)
+    if part_rows is None:
+        part_rows = partition_rows(df)
+    fair = -(-sum(part_rows) // p)
+    if max(part_rows, default=0) > 2 * fair:
+        return df.repartition(p, F.monotonically_increasing_id())
     return df
 
 
@@ -177,6 +217,23 @@ def recompute(assigned: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # O9 — bounding box (master.py:274-303)
 # ---------------------------------------------------------------------------
+
+def _spark_order(v: float) -> tuple[bool, float]:
+    # Spark orders doubles with NaN above +inf (and NaN = NaN)
+    return (True, 0.0) if math.isnan(v) else (False, v)
+
+
+def _spark_min(values) -> float | None:
+    """Spark SQL ``min`` of doubles on the driver: NULLs skipped, NaN only
+    when every value is NaN."""
+    return min((v for v in values if v is not None), key=_spark_order, default=None)
+
+
+def _spark_max(values) -> float | None:
+    """Spark SQL ``max`` of doubles on the driver: NULLs skipped, NaN when
+    any value is NaN."""
+    return max((v for v in values if v is not None), key=_spark_order, default=None)
+
 
 def bbox(points: DataFrame) -> DataFrame:
     """Global min/max of both coordinates in one partial+final agg."""
@@ -632,6 +689,13 @@ def fit(
     times per iteration); plans are rebuilt from driver-held centers
     each iteration so lineage does not grow across iterations.
 
+    Before the cache, :func:`normalize_partitions` spreads the rows over
+    the cores, the even M-way split the reference makes before any
+    mapper runs (master.py:50-77). Its decision takes the rows per
+    input partition from the bounding-box job that runs anyway, so it
+    adds no job; when it rebalances, the one hash shuffle rides the job
+    that fills the cache. An input with no rows raises ``ValueError``.
+
     ``impl``: ``"auto"`` (default) resolves to ``"sql"`` —
     :func:`lloyd_step_sql`, a pure-Catalyst string-built step with
     whole-stage codegen toggled off for small inputs (the per-iteration
@@ -664,17 +728,6 @@ def fit(
         impl = "sql"
     cols = ["x", "y"] if impl in ("arrow", "sql") else ["point_id", "x", "y"]
     points = points.select(*cols)
-    points = normalize_partitions(points).cache()
-    if impl == "arrow":
-        cached_parts = points.rdd.getNumPartitions()
-
-        def step(pts, cs):
-            return lloyd_step_arrow(pts, cs, n_parts=cached_parts)
-
-    elif impl == "sql":
-        step = lloyd_step_sql
-    else:
-        step = lloyd_step
     spark = points.sparkSession
     # The loop's only shuffle is a K-row aggregate: AQE's adaptive
     # re-planning buys nothing there but costs ~0.1 s scheduling per
@@ -683,25 +736,50 @@ def fit(
     aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
     cg_before = spark.conf.get("spark.sql.codegen.wholeStage", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
+    cached = None
     try:
-        # ONE pre-loop job: bounding box (init/repair sampling range)
-        # plus the row count that decides the codegen strategy — the
-        # count rides the same partial+final agg for free.
-        b = (
-            points.agg(
+        # ONE pre-loop job, over the uncached input: per input partition,
+        # its bounding box and row count. The row counts decide
+        # normalize_partitions' rebalance, their sum the codegen strategy;
+        # the bounds (init/repair sampling range) merge on the driver in
+        # Spark's own order, so they equal one global min/max aggregate.
+        per = (
+            points.groupBy(F.spark_partition_id())
+            .agg(
                 F.min("x").alias("min_x"),
                 F.max("x").alias("max_x"),
                 F.min("y").alias("min_y"),
                 F.max("y").alias("max_y"),
-                F.count(F.lit(1)).alias("n_rows"),
-            ).collect()
-        )[0]
-        bounds = (b["min_x"], b["max_x"], b["min_y"], b["max_y"])
-        if impl == "sql" and b["n_rows"] < CODEGEN_MIN_ROWS:
+                F.count(F.lit(1)).alias("n"),
+            )
+            .collect()
+        )
+        part_rows = [r["n"] for r in per]
+        n_rows = sum(part_rows)
+        bounds = (
+            _spark_min(r["min_x"] for r in per),
+            _spark_max(r["max_x"] for r in per),
+            _spark_min(r["min_y"] for r in per),
+            _spark_max(r["max_y"] for r in per),
+        )
+        if not n_rows:
+            raise ValueError("fit: the input has no rows")
+        points = cached = normalize_partitions(points, part_rows).cache()
+        if impl == "arrow":
+            cached_parts = points.rdd.getNumPartitions()
+
+            def step(pts, cs):
+                return lloyd_step_arrow(pts, cs, n_parts=cached_parts)
+
+        elif impl == "sql":
+            step = lloyd_step_sql
+        else:
+            step = lloyd_step
+        if impl == "sql" and n_rows < CODEGEN_MIN_ROWS:
             spark.conf.set("spark.sql.codegen.wholeStage", "false")
         if init_centers is None:
             if init == "k-means||":
-                centers = init_kmeans_parallel(points, k, seed, n_rows=b["n_rows"])
+                centers = init_kmeans_parallel(points, k, seed, n_rows=n_rows)
             else:
                 centers = init_random(k, bounds, seed)
         else:
@@ -733,4 +811,5 @@ def fit(
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
         spark.conf.set("spark.sql.codegen.wholeStage", cg_before)
-        points.unpersist()
+        if cached is not None:
+            cached.unpersist()

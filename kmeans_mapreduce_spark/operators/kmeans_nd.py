@@ -8,9 +8,9 @@ Two assignment paths, chosen by K×dim:
 - **pandas path** (large K·dim): ``mapInPandas`` with one numpy
   matmul per Arrow batch — ``|points|×dim @ dim×K`` — the vectorized
   scale path (this is how you do 768-dim × K=1000 on 100 TB; a
-  per-row expression tree would explode). Partial per-batch centroid
-  sums are emitted from the same pass, so the shuffle carries
-  O(batches×K) rows.
+  per-row expression tree would explode). Partial centroid sums are
+  accumulated over a partition's batches and emitted once per
+  partition, so the driver collects at most partitions×K rows.
 """
 
 from __future__ import annotations
@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kmeans_mapreduce_spark.functions.distance import sq_dist_nd
+from kmeans_mapreduce_spark.operators import kmeans
 
 NDCenter = tuple[int, list[float]]
 
@@ -135,8 +136,11 @@ def _assign_batches(centers_arr: np.ndarray):
                 continue
             seen = True
             x = np.stack(pdf["vec"].to_numpy())  # N×dim
-            # argmin_c |x|² − 2x·c + |c|² (|x|² constant per row)
-            scores = -2.0 * (x @ centers_arr.T) + sq_c  # N×K
+            # argmin_c |x|² − 2x·c + |c|² (|x|² constant per row), scored
+            # in place in the matmul's own N×K buffer
+            scores = x @ centers_arr.T
+            scores *= -2.0
+            scores += sq_c
             cid = scores.argmin(axis=1)
             d2 = (x ** 2).sum(axis=1) + scores[np.arange(len(x)), cid]
             n_acc += np.bincount(cid, minlength=k)
@@ -156,12 +160,25 @@ def _assign_batches(centers_arr: np.ndarray):
     return fn
 
 
+# Vector bytes per Arrow batch the n-D step sends to Python. Every core
+# streams its own partition at once, so the JVM holds one batch buffer
+# per running task: at Spark's default 10k rows, 100k×64 doubles on 4
+# balanced partitions raised the driver JVM's memory outside its heap
+# by ~60 MB over a one-partition input; 2 MiB batches (4096 rows at
+# dim 64) kept it at the one-partition level with no slower steps.
+ARROW_BATCH_BYTES = 1 << 21
+
+
 def lloyd_step_nd(
     points: DataFrame, centers: list[NDCenter]
 ) -> tuple[dict[int, list[float]], dict[int, int], float]:
     """One n-D Lloyd iteration: mapInPandas partial sums → tiny final
-    reduce on the driver (K × num_batches rows — same contract as the
-    2-D ``lloyd_step``, with numpy doing the distance math)."""
+    reduce on the driver (K rows per partition — same contract as the
+    2-D ``lloyd_step``, with numpy doing the distance math).
+
+    For the step's job only, Arrow batches are capped at
+    ``ARROW_BATCH_BYTES`` of vector data (the session's
+    ``maxRecordsPerBatch`` is restored after)."""
     order = sorted(centers)
     centers_arr = np.array([c for _, c in order], dtype=np.float64)
     cid_of_row = {i: cid for i, (cid, _) in enumerate(order)}
@@ -170,7 +187,15 @@ def lloyd_step_nd(
         _assign_batches(centers_arr),
         schema=f"cid INT, n LONG, sse DOUBLE, vsum ARRAY<DOUBLE>",
     )
-    rows = partials.collect()
+    conf = points.sparkSession.conf
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = conf.get(key)
+    cap = max(1, ARROW_BATCH_BYTES // (8 * dim))
+    conf.set(key, str(cap if int(before) <= 0 else min(int(before), cap)))
+    try:
+        rows = partials.collect()
+    finally:
+        conf.set(key, before)
     sums: dict[int, np.ndarray] = {}
     counts: dict[int, int] = {}
     sse = 0.0
@@ -196,18 +221,30 @@ def fit_nd(
     unless explicit centers are given. Returns (centers, wssse_history,
     sizes).
 
+    The input is balanced over the cores by ``kmeans.normalize_partitions``
+    before it is cached, decided from one count job that reads no
+    column, and an input with no rows raises ``ValueError``. As in the
+    2-D ``fit``, AQE is off for the duration of the loop (and restored
+    after), so the rebalance shuffle runs inside the job that fills the
+    cache rather than as a job of its own; the toggle is session-global,
+    with the same caveat for concurrent queries as ``fit``'s.
+
     ``round_digits``: round each iteration's per-dimension means
     (HALF_UP, like ``F.round``/DuckDB) before they become the next
     generation's centers — with fixed init and ``tol=0.0`` this makes
     the whole loop deterministic across engines, which is how
     ``kmeans_nd_fit_fixed`` puts ``fit_nd`` itself under the DuckDB
     hash gate (mirroring the 2-D ``kmeans_fit_fixed``)."""
-    from kmeans_mapreduce_spark.operators.kmeans import round_half_up
     pts = points.select("point_id", "vec")
-    from kmeans_mapreduce_spark.operators.kmeans import normalize_partitions
-
-    pts = normalize_partitions(pts).cache()
+    spark = pts.sparkSession
+    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    cached = None
     try:
+        part_rows = kmeans.partition_rows(pts)
+        if not sum(part_rows):
+            raise ValueError("fit_nd: the input has no rows")
+        pts = cached = kmeans.normalize_partitions(pts, part_rows).cache()
         if init_centers is None:
             first = pts.orderBy("point_id").limit(k).collect()
             centers = [(i, list(r["vec"])) for i, r in enumerate(first)]
@@ -219,7 +256,7 @@ def fit_nd(
             means, sizes, sse = lloyd_step_nd(pts, centers)
             if round_digits is not None:
                 means = {
-                    c: [round_half_up(x, round_digits) for x in v]
+                    c: [kmeans.round_half_up(x, round_digits) for x in v]
                     for c, v in means.items()
                 }
             history.append(sse)
@@ -230,4 +267,6 @@ def fit_nd(
                 break
         return centers, history, sizes
     finally:
-        pts.unpersist()
+        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
+        if cached is not None:
+            cached.unpersist()

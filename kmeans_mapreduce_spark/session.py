@@ -79,6 +79,11 @@ def get_spark(
             "jdbc:derby:;databaseName=/tmp/spark-graft-metastore;create=true",
         )
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        # Reliable checkpoints (barrier.py's SPARK_GRAFT_RELIABLE_CHECKPOINT
+        # path) are files in the checkpoint dir; without this the
+        # ContextCleaner frees only the RDD and leaves the files behind,
+        # one copy per barrier per query, for the life of the dir.
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -403,3 +403,241 @@ def test_kmeans_parallel_init_repeatable_and_weighted(spark):
     nearest = _np_nearest(xy, [(i, cx, cy) for i, (cx, cy) in enumerate(cands)])
     counts = np.bincount([cid for cid, _ in nearest], minlength=len(cands))
     assert weights.tolist() == counts.tolist()
+
+
+# ---------------------------------------------------------------------------
+# loop input balance: normalize_partitions decides by rows per partition
+# ---------------------------------------------------------------------------
+
+
+def _rows_per_partition(df) -> list[int]:
+    from pyspark.sql import functions as F
+
+    rows = df.groupBy(F.spark_partition_id().alias("pid")).count().collect()
+    return [r["count"] for r in rows]
+
+
+def _fair_share(spark, n: int) -> int:
+    return -(-n // spark.sparkContext.defaultParallelism)
+
+
+@pytest.fixture(scope="module")
+def one_row_group_points(spark, tmp_path_factory):
+    """40k 2-D points in a parquet file with ONE row group, read back
+    with 64 KB splits: the file scans as several partitions and every
+    row lands in the one whose split holds the row group's midpoint —
+    the layout of the benchmark's lineitem inputs, at test size. Returns
+    (context manager that reads the file, row count); the split-size
+    confs are set only while the caller's block runs."""
+    import contextlib
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(11)
+    xy = np.vstack([rng.normal(c, 2.0, size=(10_000, 2)) for c in [(0, 0), (30, 0), (0, 30), (30, 30)]])
+    path = str(tmp_path_factory.mktemp("one_row_group") / "points.parquet")
+    pq.write_table(
+        pa.table({"x": xy[:, 0], "y": xy[:, 1]}), path, row_group_size=len(xy)
+    )
+    confs = {
+        "spark.sql.files.maxPartitionBytes": "64k",
+        "spark.sql.files.openCostInBytes": "0",
+    }
+
+    @contextlib.contextmanager
+    def small_splits():
+        saved = {k: spark.conf.get(k, None) for k in confs}
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        try:
+            yield spark.read.parquet(path)
+        finally:
+            for k, v in saved.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+
+    return small_splits, len(xy)
+
+
+def test_normalize_partitions_balances_one_row_group_parquet(spark, one_row_group_points):
+    small_splits, n = one_row_group_points
+    with small_splits() as df:
+        assert df.rdd.getNumPartitions() > 1
+        assert max(_rows_per_partition(df)) == n  # the skew this fixes
+        out = km.normalize_partitions(df)
+        rows = _rows_per_partition(out)
+    assert sum(rows) == n
+    assert max(rows) <= 2 * _fair_share(spark, n)
+
+
+def test_normalize_partitions_balances_identical_points(spark):
+    """Duplicates must not land in one partition: a hash on the
+    coordinates would put all of them there."""
+    n = 20_000
+    df = spark.range(n, numPartitions=1).selectExpr("1.5D AS x", "-2.0D AS y")
+    rows = _rows_per_partition(km.normalize_partitions(df))
+    assert sum(rows) == n
+    assert max(rows) <= 2 * _fair_share(spark, n)
+
+
+def test_normalize_partitions_keeps_balanced_input(spark):
+    p = spark.sparkContext.defaultParallelism
+    df = spark.range(10_000, numPartitions=p).selectExpr("CAST(id AS DOUBLE) AS x")
+    out = km.normalize_partitions(df)
+    assert "Exchange" not in out._jdf.queryExecution().executedPlan().toString()
+    assert out.rdd.getNumPartitions() == p
+
+
+def test_fits_on_skewed_input_are_repeatable(spark, one_row_group_points):
+    """The rebalance key is deterministic for a deterministic input, so
+    two fits of the skewed file agree bit for bit, in 2-D and n-D."""
+    from pyspark.sql import functions as F
+
+    from kmeans_mapreduce_spark.operators import kmeans_nd as knd
+
+    small_splits, _ = one_row_group_points
+    with small_splits() as df:
+        fits = [km.fit(df, k=4, max_iter=4, tol=0.0, seed=9) for _ in range(2)]
+        nd = df.select(
+            F.monotonically_increasing_id().alias("point_id"),
+            F.array("x", "y", "x").alias("vec"),
+        )
+        fits_nd = [knd.fit_nd(nd, 4, max_iter=3, tol=0.0) for _ in range(2)]
+    assert fits[0].centers == fits[1].centers
+    assert fits[0].wssse_history == fits[1].wssse_history
+    assert fits_nd[0][0] == fits_nd[1][0]
+    assert fits_nd[0][1] == fits_nd[1][1]
+
+
+def test_fits_reject_empty_input(spark):
+    from kmeans_mapreduce_spark.operators import kmeans_nd as knd
+
+    with pytest.raises(ValueError, match="no rows"):
+        km.fit(spark.createDataFrame([], POINTS_2D), k=2)
+    with pytest.raises(ValueError, match="no rows"):
+        knd.fit_nd(spark.createDataFrame([], "point_id LONG, vec ARRAY<DOUBLE>"), 2)
+    # the loop's conf toggles are restored on the error path too
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    assert spark.conf.get("spark.sql.codegen.wholeStage") == "true"
+
+
+_RETRY_FIT = r"""
+import json
+
+from pyspark import TaskContext
+from pyspark.sql import functions as F
+
+from kmeans_mapreduce_spark.operators import kmeans as km
+from kmeans_mapreduce_spark.session import get_spark
+
+spark = get_spark("kmeans-retry-test")
+sc = spark.sparkContext
+
+
+def passthrough(fail_first_attempt):
+    @F.udf("double")
+    def f(v):
+        ctx = TaskContext.get()
+        if fail_first_attempt and ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
+            raise RuntimeError("injected failure of a first task attempt")
+        return v
+
+    return f
+
+
+# one partition: the rebalance shuffle is upstream-retried in every job
+base = spark.range(20_000, numPartitions=1).select(
+    (F.rand(1) * 100.0).alias("x"), (F.randn(2) * 10.0).alias("y")
+)
+
+
+def fit(fail):
+    pts = base.select(passthrough(fail)("x").alias("x"), "y")
+    r = km.fit(pts, k=5, max_iter=4, tol=0.0, seed=3, init="k-means||")
+    return r.centers, r.wssse_history
+
+
+clean = fit(False)
+sc.setJobGroup("retried", "fit with failing first attempts")
+retried = fit(True)
+tracker = sc.statusTracker()
+failed = 0
+for job in tracker.getJobIdsForGroup("retried"):
+    for stage in tracker.getJobInfo(job).stageIds:
+        info = tracker.getStageInfo(stage)
+        failed += info.numFailedTasks if info else 0
+print(json.dumps({"clean": clean, "retried": retried, "failed_tasks": failed}))
+spark.stop()
+"""
+
+
+def test_fit_is_unchanged_by_task_retry(tmp_path):
+    """A task that fails its first attempt upstream of the rebalance
+    (the reference's simulated mapper failure, BASELINE.md §2) is rerun
+    by Spark; the retried shuffle must feed the loop the same rows in
+    the same order, so the fit equals an undisturbed one bit for bit.
+    Runs in its own ``local[4,2]`` session (two attempts per task)."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_MASTER="local[4,2]",
+        SPARK_GRAFT_CPUS="4",
+        SPARK_GRAFT_SHUFFLE_PARTITIONS="4",
+        SPARK_GRAFT_DRIVER_MEM="1g",
+        PYTHONPATH=os.pathsep.join(filter(None, [repo, os.environ.get("PYTHONPATH")])),
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", _RETRY_FIT],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=900,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out["failed_tasks"] >= 1  # the injected failures did happen
+    assert out["retried"] == out["clean"]
+
+
+def test_driver_side_min_max_match_spark(spark):
+    """fit merges per-partition bounds on the driver; the merge must give
+    what one Spark min/max aggregate gives, NaN, ±inf and NULL included."""
+    from pyspark.sql import functions as F
+
+    nan, inf = float("nan"), float("inf")
+    cases = [
+        [1.0, -2.0, 3.5],
+        [1.0, nan, -2.0],
+        [nan, nan],
+        [None, 3.0, None],
+        [inf, nan, -inf],
+        [-inf, 5.0],
+        [None, None],
+        [-0.0, 0.0],
+    ]
+    rows = [(i, v) for i, case in enumerate(cases) for v in case]
+    got = {
+        r["i"]: (r["lo"], r["hi"])
+        for r in spark.createDataFrame(rows, "i INT, v DOUBLE")
+        .groupBy("i")
+        .agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
+        .collect()
+    }
+
+    def same(a, b):
+        return (a is None and b is None) or (
+            a is not None and b is not None and (a == b or (math.isnan(a) and math.isnan(b)))
+        )
+
+    for i, case in enumerate(cases):
+        assert same(km._spark_min(case), got[i][0]), (case, got[i])
+        assert same(km._spark_max(case), got[i][1]), (case, got[i])
