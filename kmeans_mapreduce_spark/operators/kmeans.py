@@ -46,6 +46,7 @@ from __future__ import annotations
 
 import math
 import random
+import re
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -91,13 +92,32 @@ def partition_rows(df: DataFrame) -> list[int]:
     return [r["n"] for r in counts]
 
 
+# the first word of each node line in a physical plan's tree string
+_PLAN_NODE = re.compile(r"^[\s:|+-]*(?:\*\(\d+\)\s+)?(\w+)", re.MULTILINE)
+
+
+def _order_is_fixed(df: DataFrame) -> bool:
+    """True when every run of ``df``'s plan yields the same rows in the
+    same order within each partition: no exchange anywhere in it, the
+    plan a cached frame was built from included. A shuffle's output
+    order is whatever order its fetches completed in."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return not any(n.endswith("Exchange") for n in _PLAN_NODE.findall(plan))
+
+
+def _cap_partitions(df: DataFrame) -> DataFrame:
+    p = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() > 8 * p:
+        return df.repartition(2 * p)
+    return df
+
+
 def normalize_partitions(
     df: DataFrame, part_rows: list[int] | None = None
 ) -> DataFrame:
     """Shape a loop input so every iteration uses every core, at the
     price of at most ONE shuffle, amortized over all iterations. Shared
-    by ``fit``, ``fit_nd`` and ``similarity.fit_pq_codebooks`` — retune
-    here, not per caller.
+    by ``fit`` and ``kmeans_nd.fit_nd`` — retune here, not per caller.
 
     The rule is on ROWS per partition, with P = ``defaultParallelism``:
 
@@ -106,42 +126,54 @@ def normalize_partitions(
       round-trip by every iteration (measured 1.5× above linear at 304
       partitions);
     - otherwise, when the largest partition holds more than twice its
-      fair share ceil(N/P), the input is hash-repartitioned to P
-      partitions on ``monotonically_increasing_id()``. A parquet file
-      with one row group scans as several splits with every row in one
-      of them (600k lineitem points as 3 splits, 100k×64 vectors as 4),
-      so without this every Lloyd step ran on one core; a single
-      partition is the most skewed case of the same rule;
+      fair share ceil(N/P), the input is repartitioned to P partitions.
+      A parquet file with one row group scans as several splits with
+      every row in one of them (600k lineitem points as 3 splits,
+      100k×64 vectors as 4), so without this every Lloyd step ran on
+      one core; a single partition is the most skewed case of the same
+      rule;
     - anything else is returned as it is, with no exchange added.
 
-    The key is row-unique, never the coordinates: hashing on ``(x, y)``
-    or ``vec`` would send every copy of a duplicated point to one
-    partition. It is also deterministic for a deterministic input order
-    (partition index and position in it), so two fits of one input —
-    and a fit whose upstream tasks are retried — see the same rows in
-    the same order and give bit-identical results. Hash partitioning
-    rather than round-robin skips the local sort round-robin needs for
-    retry safety. Measured with ``kmbench`` on 4 cores, medians of 10
-    alternating runs against the partition-count rule: warm ``fit_nd``
-    on 100k×64, K=256, 3 iterations 3.79 → 2.71 s; warm ``fit`` on 600k
-    lineitem points, K=8, 6 iterations 3.29 → 2.31 s. On 60k points
-    (k-means|| init) warm fits did not move and the first fit in a
-    fresh JVM took 4% longer (6.60 → 6.88 s).
+    The rebalance never hashes on the coordinates: that would send
+    every copy of a duplicated point to one partition. When the input's
+    row order is fixed (no exchange in its plan, e.g. a file or range
+    scan with narrow operators on top) it hashes on
+    ``monotonically_increasing_id()``, which is row-unique and follows
+    that order, so two fits of one input, and a fit whose upstream
+    tasks are retried, see the same rows in the same order and give
+    bit-identical results. When the order is not fixed (the input
+    comes out of a join, an aggregate or another shuffle), a rerun map
+    task could number its rows differently and drop or duplicate rows
+    under a hash on that id, so it uses round-robin ``repartition(P)``
+    instead, which Spark makes retry-safe by sorting each partition
+    before dealing it out; that sort costs time, and the fit's result
+    is bit-repeatable only as far as the input's own order is.
+
+    Measured with ``kmbench`` on 4 cores, medians of 10 alternating
+    runs against the partition-count rule (cap at 2P, raise to
+    max(2, P/4)): warm ``fit_nd`` on 100k×64, K=256, 3 iterations
+    4.00 → 3.03 s; warm ``fit`` on 600k lineitem points, K=8, 6
+    iterations 3.49 → 2.68 s; on 60k points with k-means|| init warm
+    fits 2.51 → 2.56 s and the first fit in a fresh JVM 6.88 → 7.79 s.
+    Inputs already balanced by their row groups: 600k points 2.19 →
+    2.19 s, 100k×64 vectors 2.57 → 2.76 s (5 pairs each).
 
     ``part_rows`` are the rows in each partition of ``df`` when the
-    caller already has them (``fit`` takes them from its bounding-box
-    job); without them the decision costs one :func:`partition_rows`
-    job.
+    caller already has them; without them the decision costs one
+    :func:`partition_rows` job.
     """
-    p = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() > 8 * p:
-        return df.repartition(2 * p)
+    capped = _cap_partitions(df)
+    if capped is not df:
+        return capped
     if part_rows is None:
         part_rows = partition_rows(df)
+    p = df.sparkSession.sparkContext.defaultParallelism
     fair = -(-sum(part_rows) // p)
-    if max(part_rows, default=0) > 2 * fair:
+    if max(part_rows, default=0) <= 2 * fair:
+        return df
+    if _order_is_fixed(df):
         return df.repartition(p, F.monotonically_increasing_id())
-    return df
+    return df.repartition(p)
 
 
 # ---------------------------------------------------------------------------
@@ -689,12 +721,17 @@ def fit(
     times per iteration); plans are rebuilt from driver-held centers
     each iteration so lineage does not grow across iterations.
 
-    Before the cache, :func:`normalize_partitions` spreads the rows over
-    the cores, the even M-way split the reference makes before any
-    mapper runs (master.py:50-77). Its decision takes the rows per
-    input partition from the bounding-box job that runs anyway, so it
-    adds no job; when it rebalances, the one hash shuffle rides the job
-    that fills the cache. An input with no rows raises ``ValueError``.
+    The cached input is spread over the cores by
+    :func:`normalize_partitions`, the even M-way split the reference
+    makes before any mapper runs (master.py:50-77). The decision takes
+    the rows per input partition from the bounding-box job, which runs
+    anyway and fills the cache, so it adds no job and an input that
+    needs no move is computed once. When it rebalances, the one shuffle
+    reads that cache and rides the loop's first job, and the first
+    cache is dropped after that job has filled the rebalanced one.
+    Results are bit-repeatable when the input's row order is (see
+    :func:`normalize_partitions`). An input with no rows raises
+    ``ValueError``.
 
     ``impl``: ``"auto"`` (default) resolves to ``"sql"`` —
     :func:`lloyd_step_sql`, a pure-Catalyst string-built step with
@@ -736,9 +773,11 @@ def fit(
     aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
     cg_before = spark.conf.get("spark.sql.codegen.wholeStage", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    cached = None
+    cached: list[DataFrame] = []  # the input's cache, then the rebalanced one
     try:
-        # ONE pre-loop job, over the uncached input: per input partition,
+        points = _cap_partitions(points).cache()
+        cached.append(points)
+        # ONE pre-loop job, which fills the cache: per input partition,
         # its bounding box and row count. The row counts decide
         # normalize_partitions' rebalance, their sum the codegen strategy;
         # the bounds (init/repair sampling range) merge on the driver in
@@ -764,7 +803,11 @@ def fit(
         )
         if not n_rows:
             raise ValueError("fit: the input has no rows")
-        points = cached = normalize_partitions(points, part_rows).cache()
+        balanced = normalize_partitions(points, part_rows)
+        if balanced is not points:
+            # its shuffle reads the cache the bounding-box job filled
+            points = balanced.cache()
+            cached.append(points)
         if impl == "arrow":
             cached_parts = points.rdd.getNumPartitions()
 
@@ -790,6 +833,8 @@ def fit(
         f_prev: float | None = None
         for it in range(max_iter):
             means, sizes, f_cur = step(points, centers)
+            if len(cached) > 1:  # the rebalanced cache is filled now
+                cached.pop(0).unpersist()
             if round_digits is not None:
                 means = {
                     c: (
@@ -811,5 +856,5 @@ def fit(
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
         spark.conf.set("spark.sql.codegen.wholeStage", cg_before)
-        if cached is not None:
-            cached.unpersist()
+        for df in cached:
+            df.unpersist()

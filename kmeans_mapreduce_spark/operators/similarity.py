@@ -629,6 +629,25 @@ def _check_cell_ids(centers: list[tuple[int, list[float]]], where: str) -> None:
         )
 
 
+def _training_partitions(df: DataFrame) -> DataFrame:
+    """Partitions for :func:`fit_pq_codebooks`' loop, by partition
+    count: capped at 2× parallelism above 8× (per-task launch and Arrow
+    round trip multiply by every iteration), raised to max(2,
+    parallelism/4) below that. The fits' row balance
+    (``kmeans.normalize_partitions``: a count job, then a hash
+    rebalance over every core) made this loop slower on the sf0.1
+    corpus (2000 vectors in one partition, 4 cores, medians of 9 warm
+    trainings: flat 1.27 → 1.70 s, residual 1.23 → 1.71 s; left as one
+    partition 1.57 / 1.56 s), so it keeps this rule."""
+    p = df.sparkSession.sparkContext.defaultParallelism
+    n = df.rdd.getNumPartitions()
+    if n > 8 * p:
+        return df.repartition(2 * p)
+    if n < max(2, p // 4):
+        return df.repartition(max(2, p // 4))
+    return df
+
+
 def fit_pq_codebooks(
     emb: DataFrame,
     codebook_ids: list[int],
@@ -674,7 +693,7 @@ def fit_pq_codebooks(
     import numpy as np
     import pandas as pd
 
-    from .kmeans import normalize_partitions, round_half_up
+    from .kmeans import round_half_up
 
     e0 = emb.select("vec_id", _as_double_vec(F.col("embedding")).alias("v0"))
     ids = sorted(set(codebook_ids))
@@ -723,7 +742,7 @@ def fit_pq_codebooks(
     # F.transform normalize was ~5 s of the 6.5 s flat training wall
     # at sf0.1; numpy-side it is ~0)
     e = e1.filter(F.col("nrm") > 0).select(F.col("v0").alias("nv"))
-    pts = normalize_partitions(e.select("nv")).cache()
+    pts = _training_partitions(e.select("nv")).cache()
     try:
         # books[mi][code] — init: the codebook rows' mi-th subvectors
         books = [

@@ -410,13 +410,6 @@ def test_kmeans_parallel_init_repeatable_and_weighted(spark):
 # ---------------------------------------------------------------------------
 
 
-def _rows_per_partition(df) -> list[int]:
-    from pyspark.sql import functions as F
-
-    rows = df.groupBy(F.spark_partition_id().alias("pid")).count().collect()
-    return [r["count"] for r in rows]
-
-
 def _fair_share(spark, n: int) -> int:
     return -(-n // spark.sparkContext.defaultParallelism)
 
@@ -466,21 +459,30 @@ def test_normalize_partitions_balances_one_row_group_parquet(spark, one_row_grou
     small_splits, n = one_row_group_points
     with small_splits() as df:
         assert df.rdd.getNumPartitions() > 1
-        assert max(_rows_per_partition(df)) == n  # the skew this fixes
+        assert max(km.partition_rows(df)) == n  # the skew this fixes
         out = km.normalize_partitions(df)
-        rows = _rows_per_partition(out)
+        rows = km.partition_rows(out)
     assert sum(rows) == n
     assert max(rows) <= 2 * _fair_share(spark, n)
 
 
 def test_normalize_partitions_balances_identical_points(spark):
     """Duplicates must not land in one partition: a hash on the
-    coordinates would put all of them there."""
+    coordinates would put all of them there. An input of fixed row
+    order is hashed on its row id; one that comes out of a shuffle,
+    whose order a rerun task need not repeat, is dealt round-robin."""
     n = 20_000
-    df = spark.range(n, numPartitions=1).selectExpr("1.5D AS x", "-2.0D AS y")
-    rows = _rows_per_partition(km.normalize_partitions(df))
-    assert sum(rows) == n
-    assert max(rows) <= 2 * _fair_share(spark, n)
+    fixed = spark.range(n, numPartitions=1).selectExpr("1.5D AS x", "-2.0D AS y")
+    shuffled = fixed.repartition(1)
+    p = spark.sparkContext.defaultParallelism
+    for df, by_row_id in [(fixed, True), (shuffled, False)]:
+        out = km.normalize_partitions(df)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert ("monotonically_increasing_id()" in plan) == by_row_id, plan
+        assert (f"RoundRobinPartitioning({p})" in plan) != by_row_id, plan
+        rows = km.partition_rows(out)
+        assert sum(rows) == n
+        assert max(rows) <= 2 * _fair_share(spark, n)
 
 
 def test_normalize_partitions_keeps_balanced_input(spark):
@@ -510,6 +512,35 @@ def test_fits_on_skewed_input_are_repeatable(spark, one_row_group_points):
     assert fits[0].wssse_history == fits[1].wssse_history
     assert fits_nd[0][0] == fits_nd[1][0]
     assert fits_nd[0][1] == fits_nd[1][1]
+
+
+def test_fits_compute_their_input_once(spark):
+    """The pre-loop job fills the cache, and a rebalance reads that
+    cache: balanced or skewed, a fit evaluates its input's plan once
+    per row."""
+    from pyspark.sql import functions as F
+
+    from kmeans_mapreduce_spark.operators import kmeans_nd as knd
+
+    sc = spark.sparkContext
+    n = 4_000
+    for parts in (sc.defaultParallelism, 1):  # balanced, then skewed
+        calls = sc.accumulator(0)
+
+        @F.udf("double")
+        def counted(v):
+            calls.add(1)
+            return v
+
+        pts = spark.range(n, numPartitions=parts).select(
+            counted(F.col("id").cast("double")).alias("x"),
+            (F.col("id") % 7).cast("double").alias("y"),
+        )
+        km.fit(pts, k=3, max_iter=3, tol=0.0, seed=1)
+        assert calls.value == n, parts
+        nd = pts.select(F.col("x").cast("long").alias("point_id"), F.array("x", "y").alias("vec"))
+        knd.fit_nd(nd, 3, max_iter=3, tol=0.0)
+        assert calls.value == 2 * n, parts
 
 
 def test_fits_reject_empty_input(spark):
@@ -548,21 +579,24 @@ def passthrough(fail_first_attempt):
     return f
 
 
-# one partition: the rebalance shuffle is upstream-retried in every job
+# one partition, so the rebalance runs; the first job fills the input cache
+# the rebalance shuffle reads, and its task for partition 0 fails once
 base = spark.range(20_000, numPartitions=1).select(
     (F.rand(1) * 100.0).alias("x"), (F.randn(2) * 10.0).alias("y")
 )
 
 
-def fit(fail):
+def fit(fail, shuffled):
     pts = base.select(passthrough(fail)("x").alias("x"), "y")
+    if shuffled:  # row order not fixed: the round-robin rebalance
+        pts = pts.repartition(1)
     r = km.fit(pts, k=5, max_iter=4, tol=0.0, seed=3, init="k-means||")
     return r.centers, r.wssse_history
 
 
-clean = fit(False)
+clean = [fit(False, shuffled) for shuffled in (False, True)]
 sc.setJobGroup("retried", "fit with failing first attempts")
-retried = fit(True)
+retried = [fit(True, shuffled) for shuffled in (False, True)]
 tracker = sc.statusTracker()
 failed = 0
 for job in tracker.getJobIdsForGroup("retried"):
@@ -577,9 +611,11 @@ spark.stop()
 def test_fit_is_unchanged_by_task_retry(tmp_path):
     """A task that fails its first attempt upstream of the rebalance
     (the reference's simulated mapper failure, BASELINE.md §2) is rerun
-    by Spark; the retried shuffle must feed the loop the same rows in
-    the same order, so the fit equals an undisturbed one bit for bit.
-    Runs in its own ``local[4,2]`` session (two attempts per task)."""
+    by Spark; the loop must still see the same rows in the same order,
+    so the fit equals an undisturbed one bit for bit,
+    whether the input's row order is fixed (hash rebalance) or comes
+    out of a shuffle (round-robin rebalance). Runs in its own
+    ``local[4,2]`` session (two attempts per task)."""
     import json
     import os
     import subprocess
